@@ -62,7 +62,7 @@ def q_seed_scan(spark, sf):
 
 
 def q_canonicalize(spark, sf):
-    from jirlbot_spark.functions.urls import canonicalize_udf
+    from jirlbot_spark.functions.urls_arrow import canonicalize_col
 
     o = _t(spark, sf, "orders")
     dirty = F.format_string(
@@ -72,12 +72,12 @@ def q_canonicalize(spark, sf):
     )
     return o.select(
         F.col("o_orderkey").alias("url_id"),
-        canonicalize_udf(dirty, F.lit("")).alias("canonical_url"),
+        canonicalize_col(dirty, F.lit("")).alias("canonical_url"),
     )
 
 
 def q_pld_extract(spark, sf):
-    from jirlbot_spark.functions.urls import pld_udf
+    from jirlbot_spark.functions.urls_arrow import pld_col
 
     c = _t(spark, sf, "customer")
     host = F.format_string(
@@ -87,16 +87,17 @@ def q_pld_extract(spark, sf):
         F.when(F.col("c_custkey") % 4 == 0, ".co.uk").otherwise(".com"),
     )
     return c.select(
-        F.col("c_custkey").alias("cust_id"), pld_udf(host).alias("pld")
+        F.col("c_custkey").alias("cust_id"), pld_col(host).alias("pld")
     )
 
 
 def q_url_hash(spark, sf):
-    """The REAL frontier key — murmur3_x64_128[0:64] via the vectorized
-    numpy kernel (functions/hashing.murmur3_64_from the Arrow batch path)
-    over a deterministic URL corpus whose lengths sweep every mod-16
-    residue. The golden oracle (golden_url_hash) computes the same hashes
-    with the INDEPENDENT pure-Python scalar reference
+    """The REAL frontier key — murmur3_x64_128[0:64] via the kernel the
+    crawl loop runs (functions/hashing.murmur3_64_from_arrow over the
+    Arrow string buffer, through url_hash_col's Arrow UDF) over a
+    deterministic URL corpus whose lengths sweep every mod-16 residue.
+    The golden oracle (golden_url_hash) computes the same hashes with
+    the INDEPENDENT pure-Python scalar reference
     (tests/scalar_murmur3.py, written from Appleby's public-domain
     MurmurHash3.cpp), so this key asserts algorithm correctness, not just
     plumbing."""
@@ -116,6 +117,8 @@ def q_url_hash(spark, sf):
 
 
 def q_urlseen_dedup(spark, sf):
+    """DRUM CHECK (classify_batch: the UNIQUE_KEY/DUPLICATE_KEY projection
+    over check_update_agg, the crawl loop's DRUM engine)."""
     from jirlbot_spark.operators.dedup import classify_batch
 
     o = _t(spark, sf, "orders")
@@ -134,8 +137,10 @@ def q_urlseen_dedup(spark, sf):
 
 def q_urlseen_dedup_bloom(spark, sf):
     """Same classification as urlseen_dedup, but through the Bloom
-    membership fast path (operators/membership.py) — identical output
-    against the identical oracle proves the filters are physical-only."""
+    membership fast path (operators/membership.py) — check_update_agg's
+    Bloom branch, the one the crawl loop runs with bloom_dir set.
+    Identical output against the identical oracle proves the filters are
+    physical-only."""
     import tempfile
 
     from jirlbot_spark.operators.dedup import classify_batch
@@ -270,11 +275,12 @@ def q_sitemap_parse(spark, sf):
 def q_redirect_resolve(spark, sf):
     """3xx Location routing: route_redirects filters the redirect family
     and the target resolves RFC-3986-style against the redirecting page
-    (canonicalize base_col path — the same kernel the crawl loop uses).
+    (urls_arrow.canonicalize_chunk with the page as base — the kernel the
+    crawl loop's link path runs).
     Oracle = INDEPENDENT pure-SQL merge (DuckDB CASE over the same
     VALUES; fixture rows are canonical-clean so SQL resolution is exact;
     messy inputs are covered by the urljoin cross-check in tests/)."""
-    from jirlbot_spark.functions.urls import canonicalize_udf
+    from jirlbot_spark.functions.urls_arrow import canonicalize_col
     from jirlbot_spark.operators.fetch import route_redirects
     from jirlbot_spark.sources.fixtures import redirect_scenario
 
@@ -284,7 +290,7 @@ def q_redirect_resolve(spark, sf):
     r = route_redirects(df, src_col="src_url")
     return r.select(
         "src_url",
-        canonicalize_udf(F.col("out_url"), F.col("src_url")).alias(
+        canonicalize_col(F.col("out_url"), F.col("src_url")).alias(
             "target"
         ),
     )
@@ -2364,77 +2370,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # order per round. With 80 registered keys, 30 sit outside the window
     # each round, so the dict is reordered every round to guarantee every
     # key earns a green driver CORRECTNESS row at most every other round.
-    #   r3 window: the 50 "steady-state" keys (seed_scan .. dedup_embed in
-    #     the r3 ordering) — all green in CORRECTNESS_r03.json.
-    #   r4 window: the 30 keys OUTSIDE the r3 window (12 never-checked +
-    #     18 last checked in r2) + 20 r3-green fills — CORRECTNESS_r04
-    #     50/50 green.
-    #   r5 window (this ordering): the 30 keys that sat outside the r4
-    #     window (all r3-green, now re-certified) first, then 20 fill
-    #     keys chosen so EVERY key whose code path changes in round 5 is
-    #     inside the window (LSH/simhash dedup, similarity.py ANN,
-    #     storage.py commit path, and the crawl keys being re-measured).
+    #   r3 window: the 50 "steady-state" keys — all green in
+    #     CORRECTNESS_r03.json.
+    #   r4 window: the 30 keys OUTSIDE the r3 window + 20 r3-green fills
+    #     — CORRECTNESS_r04 50/50 green.
+    #   r5 window: the 30 keys outside the r4 window first, then 20 fill
+    #     keys covering every key whose code path changed in round 5.
+    #   current window (this ordering): the 30 keys that sat outside
+    #     the r5 window (last green in r4) first; then every other key
+    #     whose code path changes this round — the Arrow canonicalize /
+    #     hash kernels (canonicalize, url_hash; pld_extract and
+    #     redirect_resolve are among the 30), the one DRUM engine
+    #     (urlseen_dedup*), star.py (star_budget), the storage commit
+    #     path (resume_state), semdedup and similarity.py
+    #     (dedup_semantic, ann_ivf); then r5-green fills.
     #     tools/check_window.py enforces that invariant — run it with the
     #     touched keys before shipping a round.
-    #   After r5: every key's latest green driver row is ≤1 round old
-    #     (30 keys r5 + 50 keys r4-or-r5).
+    #   After this round: every key's latest green driver row is ≤1
+    #     round old (50 keys this round + 30 keys r5).
     return {
-        # --- rotated back in: outside the r4 window, last green in r3 (30) ---
-        "canonical_extract": q_canonical_extract,
-        "metrics_agg": q_metrics_agg,
-        "topk_frontier": q_topk_frontier,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram": q_dedup_ngram,
-        "dedup_components": q_dedup_components,
-        "components_update": q_components_update,
-        "dns_cache": q_dns_cache,
-        "pii_scrub": q_pii_scrub,
-        "c4_clean": q_c4_clean,
-        "pair_filter": q_pair_filter,
-        "bpe_encode": q_bpe_encode,
-        "decontaminate": q_decontaminate,
-        "quality_classify": q_quality_classify,
-        "aspect_batch": q_aspect_batch,
-        "dedup_substrings": q_dedup_substrings,
-        "dedup_lines": q_dedup_lines,
-        "url_filter": q_url_filter,
-        "trap_detect": q_trap_detect,
-        "adaptive_delay": q_adaptive_delay,
-        "gopher_quality": q_gopher_quality,
-        "dedup_semantic": q_dedup_semantic,
-        "image_dup_groups": q_image_dup_groups,
-        "token_shards_roundtrip": q_token_shards,
-        "dsir_weights": q_dsir_weights,
-        "lm_perplexity": q_lm_perplexity,
-        "curate_corpus": q_curate_corpus,
-        "repetition_stats": q_repetition_stats,
-        "pack_sequences": q_pack_sequences,
-        "html_extract": q_html_extract,
-        # --- r4-green fill (20): every key touched by round-5 code
-        #     changes (text_dedup/similarity/storage) + the crawl keys
-        #     whose r4 bench numbers need a clean re-measure ---
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_text_groups": q_dedup_text_groups,
-        "ann_topk": q_ann_topk,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "dedup_embed": q_dedup_embed,
-        "resume_state": q_resume_state,
-        "urlseen_dedup": q_urlseen_dedup,
-        "urlseen_dedup_bloom": q_urlseen_dedup_bloom,
-        "urlseen_dedup_agg": q_urlseen_dedup_agg,
-        "batch_distinct": q_batch_distinct,
-        "star_budget": q_star_budget,
-        "beast_enforce": q_beast_enforce,
-        "politeness_schedule": q_politeness_schedule,
-        "seed_scan": q_seed_scan,
-        "canonicalize": q_canonicalize,
-        "url_hash": q_url_hash,
-        "fetch_join": q_fetch_join,
-        "image_verify": q_image_verify,
-        # --- outside the r5 window (30, all green in CORRECTNESS_r04;
-        #     none touched by round-5 changes) ---
+        # --- rotated back in: outside the r5 window, last green in r4 (30) ---
         "pld_extract": q_pld_extract,
         "robots_requested_anti": q_robots_requested_anti,
         "robots_check": q_robots_check,
@@ -2465,6 +2420,60 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_features": q_audio_features,
         "frame_sample": q_frame_sample,
         "politeness_stream_state": q_politeness_stream_state,
+        # --- code path changed this round (9, r5-green) ---
+        "canonicalize": q_canonicalize,
+        "url_hash": q_url_hash,
+        "urlseen_dedup": q_urlseen_dedup,
+        "urlseen_dedup_bloom": q_urlseen_dedup_bloom,
+        "urlseen_dedup_agg": q_urlseen_dedup_agg,
+        "star_budget": q_star_budget,
+        "resume_state": q_resume_state,
+        "dedup_semantic": q_dedup_semantic,
+        "ann_ivf": q_ann_ivf,
+        # --- r5-green fill (11) ---
+        "beast_enforce": q_beast_enforce,
+        "politeness_schedule": q_politeness_schedule,
+        "fetch_join": q_fetch_join,
+        "image_verify": q_image_verify,
+        "ann_topk": q_ann_topk,
+        "ann_lsh": q_ann_lsh,
+        "dedup_embed": q_dedup_embed,
+        "dedup_minhash": q_dedup_minhash,
+        "dedup_simhash": q_dedup_simhash,
+        "dedup_text_groups": q_dedup_text_groups,
+        "seed_scan": q_seed_scan,
+        # --- outside the current window (30, all green in r5; none
+        #     touched by this round's changes) ---
+        "canonical_extract": q_canonical_extract,
+        "metrics_agg": q_metrics_agg,
+        "topk_frontier": q_topk_frontier,
+        "dedup_exact": q_dedup_exact,
+        "dedup_ngram": q_dedup_ngram,
+        "dedup_components": q_dedup_components,
+        "components_update": q_components_update,
+        "dns_cache": q_dns_cache,
+        "pii_scrub": q_pii_scrub,
+        "c4_clean": q_c4_clean,
+        "pair_filter": q_pair_filter,
+        "bpe_encode": q_bpe_encode,
+        "decontaminate": q_decontaminate,
+        "quality_classify": q_quality_classify,
+        "aspect_batch": q_aspect_batch,
+        "dedup_substrings": q_dedup_substrings,
+        "dedup_lines": q_dedup_lines,
+        "url_filter": q_url_filter,
+        "trap_detect": q_trap_detect,
+        "adaptive_delay": q_adaptive_delay,
+        "gopher_quality": q_gopher_quality,
+        "image_dup_groups": q_image_dup_groups,
+        "token_shards_roundtrip": q_token_shards,
+        "dsir_weights": q_dsir_weights,
+        "lm_perplexity": q_lm_perplexity,
+        "curate_corpus": q_curate_corpus,
+        "repetition_stats": q_repetition_stats,
+        "pack_sequences": q_pack_sequences,
+        "html_extract": q_html_extract,
+        "batch_distinct": q_batch_distinct,
     }
 
 

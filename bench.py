@@ -260,10 +260,8 @@ def run_frontier_pipeline(
         .agg(F.count("*").alias("indegree"))
         .localCheckpoint(eager=True)
     )
-    # the SHIPPED variant (the loop + driver key run star_budgets_scalable;
-    # the all-PLD single-window star_budgets exists only as the
-    # property-test reference) — r4 verdict: the headline must measure
-    # the path the engine actually ships
+    # the SHIPPED budget operator (the loop + driver key run it too) —
+    # r4 verdict: the headline must measure the path the engine ships
     budgets = star_budgets_scalable(
         deg, top_k=10_000, b_hi=10_000, b_lo=10
     ).select("pld_hash", "budget")

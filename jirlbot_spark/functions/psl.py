@@ -11,15 +11,15 @@ embedded subset; this module replaces it with the full ~9.5k-rule list and
 the complete PSL match algorithm (exact rules, leftmost ``*.`` wildcards,
 ``!`` exceptions, the implicit ``*`` default).
 
-Parsed once per process into three frozensets consumed by both the pandas
-kernel (urls.pld_series) and the Arrow kernel (urls_arrow.pld_chunk):
+Parsed once per process into three frozensets consumed by the Arrow
+kernel (urls_arrow.pld_chunk) and its pandas test reference:
 
   EXACT             — rule strings, e.g. "com", "co.uk", "github.io"
   WILDCARD_PARENTS  — parents of ``*.x`` rules, e.g. "ck" for "*.ck"
   EXCEPTIONS        — ``!rule`` strings minus the bang, e.g. "www.ck"
 
 Unicode rules are stored in BOTH their punycode form (hosts arrive
-punycoded from canonicalize — urls.py IDN step) and their raw lowercase
+punycoded from canonicalize — urls_arrow's IDN step) and their raw lowercase
 form (defensive: a caller may pass an un-IDNA'd host straight to pld).
 Python's "idna" codec is IDNA2003 — the same codec canonicalize uses for
 hosts, so the two sides agree even where IDNA2003 and UTS-46 differ.

@@ -10,22 +10,27 @@ membership into sequential per-bucket merges.
 Spark already gives us that shape for free:
   - bucketing            = hash partitioning on the key (shuffle exchange)
   - the sequential merge = a left-anti join against the bucket-partitioned
-                           `url_seen` table (sort-merge or shuffled-hash,
-                           Catalyst's pick; runtime bloom filter pre-probes)
+                           `url_seen` table (shuffled-hash; runtime bloom
+                           filter pre-probes)
   - arrival-order redispatch = carry an explicit `seq` column; classification
                            is a COLUMN, not a callback
   - the RAM fast-path    = per-bucket bloom sidecars (membership.py) that
                            let a batch skip the join for definite-negatives
 
+One engine: `check_update_agg` (CHECK+UPDATE — the crawl loop's path).
+`classify_batch` (CHECK) is a projection over it. APPEND_UPDATE is
+`star.distinct_new_edges` specialized to the PLD-edge schema, and a
+blind UPDATE is `check_update_agg`'s `uniques`.
+
 Classification semantics (pinned by the reference's DrumTest contract):
 within one batch, the FIRST arrival of a key is UNIQUE_KEY iff the key is
 not in the store; every later arrival of the same key in the same batch is
-DUPLICATE_KEY. check_update appends the newly-unique keys to the store.
+DUPLICATE_KEY. The caller appends `uniques` to the store.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jirlbot_spark.session import DEFAULT_NUM_BUCKETS
@@ -61,75 +66,6 @@ def _bloom_epoch_kw(bloom_min_epoch) -> dict:
     return {}
 
 
-def classify_batch(
-    batch: DataFrame,
-    seen: DataFrame | None,
-    key_col: str = "url_hash",
-    order_col: str | None = None,
-    num_buckets: int = DEFAULT_NUM_BUCKETS,
-    bloom_dir: str | None = None,
-    bloom_min_epoch: int | None = None,
-) -> DataFrame:
-    """DRUM CHECK: classify every batch row UNIQUE_KEY / DUPLICATE_KEY.
-
-    Plan shape (scale-reviewed): the wide batch is shuffled on `key_col`
-    exactly ONCE — the in-batch window and the membership left-join share
-    the same hash partitioning, so Catalyst reuses the exchange; only the
-    narrow (key-only) `seen` projection shuffles on the probe side, and
-    the 4.x runtime bloom filter drops most probes before the join.
-    UNIQUE iff first in-batch arrival AND absent from the store — one
-    join, no anti-join + join-back double pass (that earlier formulation
-    scaled at 1.4x from 8->32 cores; this one is a single wide pass).
-
-    `seen` is unique-by-key by store invariant (only UNIQUE_KEY rows are
-    ever appended); the narrow dropDuplicates is cheap insurance so a
-    duplicated store can never multiply batch rows through the left join.
-
-    `bloom_dir` activates the DRUM RAM-fast-path analog (membership.py):
-    a shuffle-free mapInPandas probe of per-bucket Bloom files marks rows
-    whose key is *certainly* absent from the store; those rows bypass the
-    membership join (the maybe-flag joins the equi-condition, so only
-    Bloom-positive rows can match). Classification is bit-identical with
-    or without it (equivalence-tested) — filters are physical only.
-    """
-    batch = with_seq(batch, order_col)
-    if bloom_dir is not None and seen is not None:
-        from jirlbot_spark.operators.membership import MAYBE_COL, bloom_probe
-
-        batch = bloom_probe(
-            batch, bloom_dir, key_col=key_col, num_buckets=num_buckets,
-            **_bloom_epoch_kw(bloom_min_epoch),
-        )
-    w = Window.partitionBy(key_col).orderBy(SEQ_COL)
-    batch = batch.withColumn("__rn", F.row_number().over(w))
-
-    if seen is not None:
-        probe = (
-            seen.select(F.col(key_col).alias("__probe_key"))
-            .dropDuplicates(["__probe_key"])
-            .withColumn("__in_seen", F.lit(True))
-        )
-        cond = F.col(key_col) == F.col("__probe_key")
-        if bloom_dir is not None:
-            from jirlbot_spark.operators.membership import MAYBE_COL
-
-            cond = cond & F.col(MAYBE_COL)
-        batch = batch.join(probe, cond, "left").drop("__probe_key")
-        if bloom_dir is not None:
-            batch = batch.drop(MAYBE_COL)
-    else:
-        batch = batch.withColumn("__in_seen", F.lit(None).cast("boolean"))
-
-    out = batch.withColumn(
-        RESULT_COL,
-        F.when(
-            (F.col("__rn") == 1) & F.col("__in_seen").isNull(),
-            F.lit(UNIQUE_KEY),
-        ).otherwise(F.lit(DUPLICATE_KEY)),
-    )
-    return out.drop("__rn", "__in_seen")
-
-
 def check_update_agg(
     batch: DataFrame,
     seen: DataFrame | None,
@@ -139,23 +75,27 @@ def check_update_agg(
     bloom_dir: str | None = None,
     bloom_min_epoch: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """DRUM CHECK_UPDATE, aggregation formulation: returns
-    (fresh_first_arrival_rows, new_unique_keys).
+    """DRUM CHECK_UPDATE: returns (fresh_first_arrival_rows,
+    new_unique_keys).
 
-    Same result set as `check_update(...)` filtered to UNIQUE_KEY (property
-    -tested), but a better physical plan for the 10^10-row tier:
+    The caller commits `new_unique_keys` (bucket column attached, ready
+    for partitioned append) atomically with the rest of the batch's
+    tables — the store append IS the UPDATE half, kept out of this
+    function so one manifest rename commits everything
+    (storage.TableStore.commit_batch). Physical plan, sized for the
+    10^10-row tier:
 
       - in-batch first-arrival via groupBy(key).agg(min_by(row, seq)):
         the partial aggregate collapses in-batch duplicates BEFORE the
-        exchange (the window formulation ships every duplicate through
-        the shuffle), and no Window operator appears. Catalyst plans
+        exchange (a row_number window ships every duplicate through the
+        shuffle), and no Window operator appears. Catalyst plans
         min_by-over-struct as SortAggregate (var-length buffers are not
         hash-aggregable), so the wide rows are still sorted by key within
-        partitions — measured FASTER than both the window formulation
-        (which sorts just as much and then runs Window) and a "zero-sort"
-        narrow-min + join-back formulation (whose three hash-join builds
-        over every distinct key cost more than the sorts; measured 3.5x
-        slower at 32M distinct keys);
+        partitions — measured FASTER than both a row_number window
+        formulation (which sorts just as much and then runs Window) and
+        a "zero-sort" narrow-min + join-back formulation (whose three
+        hash-join builds over every distinct key cost more than the
+        sorts; measured 3.5x slower at 32M distinct keys);
       - membership via LEFT ANTI join with a shuffle_hash hint on the
         (narrow, key-only) seen side: streams the agged rows against a
         per-partition hash set instead of sort-merging, and reuses the
@@ -165,7 +105,7 @@ def check_update_agg(
     Seq ties (same key, same order value) pick an arbitrary winner via
     min_by — callers for whom ties are possible (the crawl loop, keyed by
     depth) only ever have bit-identical tied rows, so the choice is
-    immaterial; the window formulation has the same property.
+    immaterial.
 
     `bloom_dir` (DRUM RAM-fast-path analog): rows whose key the per-bucket
     Bloom filters prove absent bypass the anti-join entirely — they join
@@ -215,75 +155,33 @@ def check_update_agg(
     return fresh, uniques
 
 
-def check_update(
+def classify_batch(
     batch: DataFrame,
     seen: DataFrame | None,
+    order_col: str,
     key_col: str = "url_hash",
-    order_col: str | None = None,
     num_buckets: int = DEFAULT_NUM_BUCKETS,
     bloom_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """DRUM CHECK_UPDATE: returns (classified_batch, new_unique_keys).
-
-    The caller commits `new_unique_keys` (bucket column attached, ready for
-    partitioned append) atomically with the rest of the batch's tables —
-    the store append IS the UPDATE half, kept out of this function so one
-    manifest rename commits everything (storage.TableStore.commit_batch).
-    """
-    classified = classify_batch(
-        batch, seen, key_col, order_col, num_buckets, bloom_dir=bloom_dir
-    )
-    uniques = (
-        classified.filter(F.col(RESULT_COL) == UNIQUE_KEY)
-        .select(key_col)
-        .withColumn("bucket", F.pmod(F.col(key_col), F.lit(num_buckets)).cast("int"))
-    )
-    return classified, uniques
-
-
-def update(
-    batch: DataFrame,
-    seen: DataFrame | None,
-    key_col: str = "url_hash",
-    num_buckets: int = DEFAULT_NUM_BUCKETS,
+    bloom_min_epoch: int | None = None,
 ) -> DataFrame:
-    """DRUM UPDATE: merge keys into the store WITHOUT classification
-    (the reference's blind-update op; DrumOperation.UPDATE).
+    """DRUM CHECK: every batch row labeled UNIQUE_KEY / DUPLICATE_KEY in
+    RESULT_COL, as a projection over check_update_agg: a row is UNIQUE_KEY
+    iff its (key, seq) is one of the fresh first arrivals.
 
-    Returns the new-keys frame (bucket attached) for the caller to append
-    via TableStore.commit_batch — only keys not already present are
-    returned, so the store keeps its unique-by-key invariant. No
-    dispatch/result column: UPDATE has no answer by contract.
+    `order_col` is required: the join-back reads the seq twice, so it
+    must be a deterministic column, never a per-plan generated id. Rows
+    tied on (key, order value) all get the same label — give every
+    arrival of a key its own order value.
     """
-    keys = batch.select(key_col).dropDuplicates([key_col])
-    if seen is not None:
-        keys = keys.join(
-            seen.select(key_col).hint("shuffle_hash"), key_col, "left_anti"
-        )
-    return keys.withColumn(
-        "bucket", F.pmod(F.col(key_col), F.lit(num_buckets)).cast("int")
+    batch = with_seq(batch, order_col)
+    fresh, _ = check_update_agg(
+        batch, seen, key_col, num_buckets=num_buckets, bloom_dir=bloom_dir,
+        bloom_min_epoch=bloom_min_epoch,
     )
-
-
-def append_update(
-    batch: DataFrame,
-    existing: DataFrame | None,
-    key_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """DRUM APPEND_UPDATE: append values under a key, merging with the
-    store (DrumOperation.APPEND_UPDATE — STAR uses it to accumulate the
-    per-PLD source sets feeding the in-degree count).
-
-    Spark-first realization: the "append" is a distinct-union delta —
-    returns only the (key, values) tuples NOT already in the store, so a
-    partitioned append keeps the store a set. The STAR pipeline composes
-    this with pld_indegree's incremental aggregation
-    (operators/star.distinct_new_edges is this function specialized to
-    the edge schema).
-    """
-    cols = [key_col, *value_cols]
-    delta = batch.select(*cols).dropDuplicates(cols)
-    if existing is not None:
-        delta = delta.join(existing.select(*cols), cols, "left_anti")
-    return delta
+    firsts = fresh.select(key_col, SEQ_COL, F.lit(True).alias("__first"))
+    return batch.join(firsts, [key_col, SEQ_COL], "left").select(
+        *batch.columns,
+        F.when(F.col("__first"), F.lit(UNIQUE_KEY))
+        .otherwise(F.lit(DUPLICATE_KEY))
+        .alias(RESULT_COL),
+    )

@@ -22,7 +22,7 @@ incarnation:
 
 Correctness contract: a Bloom NEGATIVE is definitive (no false negatives
 ⇒ the key is certainly absent from the store); a POSITIVE is advisory and
-falls through to the exact membership join in `dedup.classify_batch`.
+falls through to the exact anti-join in `dedup.check_update_agg`.
 Classification is therefore bit-identical with or without filters
 (equivalence-tested in tests/test_membership.py) — the filters are purely
 a physical fast path, exactly like DRUM's RAM layer.

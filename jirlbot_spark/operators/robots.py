@@ -3,8 +3,8 @@
 Two DRUM-backed structures in the reference become two joins here:
 
   - robots_requested: a host is fetched-for-robots at most once →
-    left-anti join of candidate hosts against the requested set (the
-    check_update pattern keyed on host_hash).
+    left-anti join of candidate hosts against the requested set (DRUM's
+    check+update pattern keyed on host_hash).
   - robots check: URL × cached rules → PASS / FAIL / UNKNOWN(defer),
     with RFC 9309 semantics: Allow + Disallow directives, `*` wildcards
     and `$` end anchors inside rules, longest-match precedence (the

@@ -93,7 +93,14 @@ def train_centroids(
         .toPandas()
     )
     if len(sample) == 0:
-        sample = vectors.select(F.col(vec_col)).toPandas()
+        # the hash sample can miss every id (few or clustered ids); the
+        # fallback stays bounded: the `budget` lowest ids, deterministic
+        sample = (
+            vectors.orderBy(F.col(id_col))
+            .select(F.col(vec_col))
+            .limit(budget)
+            .toPandas()
+        )
     mat = np.vstack(sample[vec_col].to_numpy()).astype(np.float64)
     return _quantize_centroids(_kmeans_numpy(mat, n_clusters, seed))
 

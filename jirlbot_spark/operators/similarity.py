@@ -605,11 +605,18 @@ def ivf_topk(
             corpus.select(F.col(vec_col)).limit(sample_cap + 1).toPandas()
         )
         if len(sample) > sample_cap:
+            if corpus_rows is not None:
+                raise ValueError(
+                    f"corpus_rows hint ({corpus_rows}) looks far too HIGH: "
+                    "the hash sample came back empty yet the corpus holds "
+                    f"more than {sample_cap} rows; pass a closer hint or "
+                    "omit it to let ivf_topk count the corpus"
+                )
             raise ValueError(
-                f"corpus_rows hint ({corpus_rows}) looks far too HIGH: "
-                "the hash sample came back empty yet the corpus holds "
-                f"more than {sample_cap} rows; pass a closer hint or "
-                "omit it to let ivf_topk count the corpus"
+                "ivf_topk: the xxhash64 training sample came back empty "
+                f"although the corpus holds more than {sample_cap} rows "
+                f"(every {id_col} misses residue 0 mod {sample_mod}: "
+                "too few distinct ids?); give each row its own id"
             )
         if len(sample) == 0:
             return _empty_ranked(corpus)

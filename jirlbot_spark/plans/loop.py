@@ -289,7 +289,7 @@ class CrawlLoop:
         return revisit.select(*[f.name for f in FRONTIER_SCHEMA.fields])
 
     def _dedup_new(self, prepared: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
-        """DRUM check_update: returns (new frontier rows, new url_seen keys)."""
+        """DRUM check+update: returns (new frontier rows, new url_seen keys)."""
         seen = self.store.read("url_seen")
         fresh, uniques = check_update_agg(
             prepared,
@@ -675,7 +675,7 @@ class CrawlLoop:
                 "new_depth", (F.col("src_depth") + 1).cast("int")
             )
             # per-link depth = src depth + 1; a URL reached from several
-            # sources gets its MIN depth (check_update keeps the first
+            # sources gets its MIN depth (check_update_agg keeps the first
             # arrival under order_col=depth). src_pld rides through
             # canonicalization so edges pair canonical dst with its source.
             # base_col=src_url: relative refs (redirect Locations, and any

@@ -69,7 +69,7 @@ def stream_crawl(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.head(1):
-            # seed ingest is itself a DRUM check_update; commit under the
+            # seed ingest is itself a DRUM check+update; commit under the
             # next batch id
             prepared = loop._prepare_urls(batch_df, "url", None, 0)
             nxt = loop.store.last_batch() + 1

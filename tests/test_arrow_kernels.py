@@ -1,7 +1,8 @@
-"""Equivalence: Arrow compute kernels (urls_arrow, murmur3_64_from_arrow)
-vs the pandas reference implementations whose contract the golden tables
-in test_urls.py pin. The arrow path is purely a physical optimization —
-any divergence here is a correctness bug."""
+"""Equivalence: the shipped Arrow compute kernels (urls_arrow,
+murmur3_64_from_arrow) vs the pandas reference in tests/pandas_urls.py,
+both pinned by the golden tables in test_urls.py. Two regex engines and
+two buffer layouts computing one contract — any divergence here is a
+correctness bug."""
 
 from __future__ import annotations
 
@@ -12,20 +13,18 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from jirlbot_spark.functions.hashing import (
-    murmur3_64_from_arrow,
-    murmur3_64_series,
-)
-from jirlbot_spark.functions.urls import (
-    canonicalize_series,
-    host_of_series,
-    pld_series,
-)
+from jirlbot_spark.functions.hashing import murmur3_64_from_arrow
 from jirlbot_spark.functions.urls_arrow import (
     canonicalize_chunk,
     canonicalize_with_host,
     host_of_chunk,
     pld_chunk,
+)
+from tests.pandas_urls import (
+    canonicalize_series,
+    host_of_series,
+    murmur3_64_series,
+    pld_series,
 )
 from tests.test_urls import CANON_CASES, PLD_CASES
 
@@ -161,8 +160,8 @@ def test_canonicalize_golden_with_bases():
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_resolve_fuzz_equivalence(seed):
-    from jirlbot_spark.functions.urls import resolve_series
     from jirlbot_spark.functions.urls_arrow import resolve_chunk
+    from tests.pandas_urls import resolve_series
 
     rng = random.Random(seed)
     uf = ["", "/abs/x", "rel/y", "../up", "//oth.er/z", "?q=9", "#top",
@@ -186,11 +185,9 @@ def test_resolve_fuzz_equivalence(seed):
 
 def test_prepare_arrow_base_path_spark(spark):
     """prepare_urls_fused with base_col (arrow resolve path) ≡ the pandas
-    reference path on relative links."""
-    from jirlbot_spark.functions.prepare import (
-        prepare_urls_fused,
-        prepare_urls_pandas,
-    )
+    reference on relative links."""
+    from jirlbot_spark.functions.prepare import prepare_urls_fused
+    from tests.pandas_urls import prepare_frame
 
     rows = []
     for i in range(300):
@@ -202,14 +199,14 @@ def test_prepare_arrow_base_path_spark(spark):
                 i,
             )
         )
-    df = spark.createDataFrame(rows, ["url", "base", "tag"])
+    pdf = pd.DataFrame(rows, columns=["url", "base", "tag"])
     a = (
-        prepare_urls_fused(df, "url", "base", keep=("tag",))
+        prepare_urls_fused(spark.createDataFrame(pdf), "url", "base", keep=("tag",))
         .toPandas().sort_values("tag").reset_index(drop=True)
     )
     b = (
-        prepare_urls_pandas(df, "url", "base", keep=("tag",))
-        .toPandas().sort_values("tag").reset_index(drop=True)
+        prepare_frame(pdf.copy(), "url", "base")
+        .sort_values("tag").reset_index(drop=True)
     )
     assert len(a) == len(b) > 0
     for col in ["url", "url_hash", "host", "host_hash", "pld", "pld_hash", "tag"]:
@@ -219,7 +216,8 @@ def test_prepare_arrow_base_path_spark(spark):
 def test_prepare_arrow_path_spark(spark):
     """prepare_urls_fused (arrow mapInArrow path, base_col=None) produces
     exactly the pandas kernel's rows for a messy frontier."""
-    from jirlbot_spark.functions.prepare import prepare_frame, prepare_urls_fused
+    from jirlbot_spark.functions.prepare import prepare_urls_fused
+    from tests.pandas_urls import prepare_frame
 
     raws = [c[0] for c in NOBASE_CASES] + [
         f"HTTP://Sub{i % 7}.Example{i % 13}.COM:80/a/../p/{i}?x={i}#f"

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from jirlbot_spark.operators.dedup import (
     DUPLICATE_KEY,
     UNIQUE_KEY,
-    check_update,
+    check_update_agg,
     classify_batch,
 )
 from jirlbot_spark.sources.storage import TableStore, TableWrite
@@ -27,6 +27,13 @@ def _results(df):
     return [r.drum_result for r in rows]
 
 
+def _check_update(batch, seen):
+    """DrumTest's CHECK_UPDATE step: the classified batch plus the store
+    delta (check_update_agg's uniques)."""
+    _, uniques = check_update_agg(batch, seen, order_col="arrival")
+    return classify_batch(batch, seen, order_col="arrival"), uniques
+
+
 def test_in_batch_duplicate_classification(spark):
     b = _batch(spark, [1, 2, 3, 2])
     out = classify_batch(b, None, order_col="arrival")
@@ -37,13 +44,13 @@ def test_check_update_sequence(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "state"))
 
     b1 = _batch(spark, [1, 2, 3, 2])
-    c1, u1 = check_update(b1, None, order_col="arrival")
+    c1, u1 = _check_update(b1, None)
     assert _results(c1) == [UNIQUE_KEY, UNIQUE_KEY, UNIQUE_KEY, DUPLICATE_KEY]
     store.commit_batch(0, {"url_seen": TableWrite(u1, partition_by=("bucket",))})
     assert sorted(r.url_hash for r in store.read("url_seen").collect()) == [1, 2, 3]
 
     b2 = _batch(spark, [3, 4, 1, 4, 5])
-    c2, u2 = check_update(b2, store.read("url_seen"), order_col="arrival")
+    c2, u2 = _check_update(b2, store.read("url_seen"))
     assert _results(c2) == [
         DUPLICATE_KEY,
         UNIQUE_KEY,
@@ -60,7 +67,7 @@ def test_check_update_sequence(spark, tmp_path):
 def test_check_does_not_mutate(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "state"))
     b1 = _batch(spark, [7, 8])
-    _, u1 = check_update(b1, None, order_col="arrival")
+    _, u1 = _check_update(b1, None)
     store.commit_batch(0, {"url_seen": TableWrite(u1, partition_by=("bucket",))})
     before = store.read("url_seen").count()
     classify_batch(_batch(spark, [7, 9]), store.read("url_seen"), order_col="arrival")
@@ -71,8 +78,8 @@ def test_idempotence_union(spark):
     """run(batch ∪ batch) unique-key set == run(batch)."""
     b = _batch(spark, [10, 11, 12, 11])
     bb = b.unionAll(b)
-    _, u1 = check_update(b, None, order_col="arrival")
-    _, u2 = check_update(bb, None, order_col="arrival")
+    _, u1 = _check_update(b, None)
+    _, u2 = _check_update(bb, None)
     assert sorted(r.url_hash for r in u1.collect()) == sorted(
         r.url_hash for r in u2.collect()
     )
@@ -81,14 +88,12 @@ def test_idempotence_union(spark):
 def test_atomic_resume(spark, tmp_path):
     root = str(tmp_path / "state")
     store = TableStore(spark, root)
-    _, u1 = check_update(_batch(spark, [1, 2]), None, order_col="arrival")
+    _, u1 = _check_update(_batch(spark, [1, 2]), None)
     store.commit_batch(0, {"url_seen": TableWrite(u1, partition_by=("bucket",))})
     # simulate crash: a new store instance over the same root resumes
     store2 = TableStore(spark, root)
     assert store2.last_batch() == 0
-    _, u2 = check_update(
-        _batch(spark, [2, 3]), store2.read("url_seen"), order_col="arrival"
-    )
+    _, u2 = _check_update(_batch(spark, [2, 3]), store2.read("url_seen"))
     store2.commit_batch(1, {"url_seen": TableWrite(u2, partition_by=("bucket",))})
     assert sorted(r.url_hash for r in store2.read("url_seen").collect()) == [1, 2, 3]
     with pytest.raises(ValueError):
@@ -99,9 +104,8 @@ def test_gc_orphans_and_compact(spark, tmp_path):
     root = str(tmp_path / "state")
     store = TableStore(spark, root)
     for i in range(3):
-        _, u = check_update(
-            _batch(spark, [i * 10, i * 10 + 1]), store.read("url_seen"),
-            order_col="arrival",
+        _, u = _check_update(
+            _batch(spark, [i * 10, i * 10 + 1]), store.read("url_seen")
         )
         store.commit_batch(i, {"url_seen": TableWrite(u, partition_by=("bucket",))})
     assert store.read("url_seen").count() == 6
@@ -110,12 +114,11 @@ def test_gc_orphans_and_compact(spark, tmp_path):
     assert len(store.manifest()["tables"]["url_seen"]) == 1
 
 
-def test_check_update_agg_equiv_window(spark, tmp_path):
-    """check_update_agg's fresh set ≡ check_update filtered to UNIQUE_KEY,
-    on a batch with in-batch duplicates and a half-populated store —
-    with AND without the Bloom sidecar fast path (which must be
-    physical-only)."""
-    from jirlbot_spark.operators.dedup import check_update, check_update_agg
+def test_check_update_agg_matches_python_reference(spark, tmp_path):
+    """check_update_agg's fresh set ≡ a pure-Python first-arrival scan
+    minus the store, on a batch with in-batch duplicates and a
+    half-populated store — with AND without the Bloom sidecar fast path
+    (which must be physical-only)."""
     from jirlbot_spark.operators.membership import build_bloom_files
 
     n = 500
@@ -129,19 +132,19 @@ def test_check_update_agg_equiv_window(spark, tmp_path):
     )
     seen = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
 
-    cls, _ = check_update(dup, seen, key_col="url_hash", order_col="arrival")
-    want = {
-        (r.url_hash, r.arrival)
-        for r in cls.filter(F.col("drum_result") == "UNIQUE_KEY")
-        .select("url_hash", "arrival")
-        .collect()
-    }
+    first: dict[int, int] = {}
+    for arrival in range(2 * n):
+        first.setdefault(arrival % n * 7919 % 1000, arrival)
+    want = {(k, a) for k, a in first.items() if k % 2}
     assert 0 < len(want) < n  # both classes populated
 
     fresh, uniq = check_update_agg(
         dup, seen, key_col="url_hash", order_col="arrival"
     )
-    got = {(r.url_hash, r.arrival) for r in fresh.select("url_hash", "arrival").collect()}
+    got = {
+        (r.url_hash, r.arrival)
+        for r in fresh.select("url_hash", "arrival").collect()
+    }
     assert got == want
     assert {r.url_hash for r in uniq.collect()} == {k for k, _ in want}
 
@@ -163,31 +166,6 @@ def test_check_update_agg_equiv_window(spark, tmp_path):
         for r in fresh_b.select("url_hash", "arrival").collect()
     }
     assert got_b == want
-
-
-def test_update_and_append_update_ops(spark):
-    """The DRUM op surface beyond CHECK/CHECK_UPDATE: UPDATE merges keys
-    blindly (no classification), APPEND_UPDATE accumulates value sets
-    under keys — both return store-consistent deltas."""
-    from jirlbot_spark.operators.dedup import append_update, update
-
-    batch = spark.createDataFrame(
-        [(1,), (2,), (2,), (3,)], ["url_hash"]
-    )
-    seen = spark.createDataFrame([(2,), (9,)], ["url_hash"])
-    got = {r.url_hash for r in update(batch, seen).collect()}
-    assert got == {1, 3}
-    assert {r.url_hash for r in update(batch, None).collect()} == {1, 2, 3}
-
-    edges = spark.createDataFrame(
-        [(10, 20), (10, 20), (10, 30), (40, 50)], ["dst_pld", "src_pld"]
-    )
-    store = spark.createDataFrame([(10, 20)], ["dst_pld", "src_pld"])
-    delta = {
-        (r.dst_pld, r.src_pld)
-        for r in append_update(edges, store, "dst_pld", ["src_pld"]).collect()
-    }
-    assert delta == {(10, 30), (40, 50)}
 
 
 def test_iceberg_store_gated(spark, tmp_path):

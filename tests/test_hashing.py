@@ -6,10 +6,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from jirlbot_spark.functions.hashing import (
-    murmur3_64_series,
-    murmur3_x64_128_batch,
-)
+from jirlbot_spark.functions.hashing import murmur3_x64_128_batch
+from tests.pandas_urls import murmur3_64_series
 from tests.scalar_murmur3 import murmur3_x64_128
 
 
@@ -71,10 +69,14 @@ def test_spark_udf_roundtrip(spark):
     from jirlbot_spark.functions.hashing import url_hash_col
 
     df = spark.createDataFrame(
-        [(f"http://s{i}.com/",) for i in range(100)], ["url"]
+        [(f"http://s{i}.com/",) for i in range(100)] + [(None,)], "url string"
     )
     rows = df.withColumn("h", url_hash_col("url")).collect()
+    assert len(rows) == 101
     for r in rows:
+        if r.url is None:
+            assert r.h is None  # null in, null out
+            continue
         e1, _ = murmur3_x64_128(r.url.encode())
         assert r.h == int(np.uint64(e1).astype(np.int64))
 

@@ -137,3 +137,36 @@ def test_no_cartesian_product(spark, corpus):
         .toString()
     )
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+
+
+def test_empty_hash_sample_fallback_is_bounded(spark, monkeypatch):
+    """Ids that all miss residue 0 of pmod(xxhash64(id), mod) empty the
+    hash sample; the fallback then trains on the `budget` lowest ids —
+    never the whole corpus."""
+    import jirlbot_spark.operators.semdedup as sd
+
+    budget, n = 8, 40  # 2 clusters x 4 rows each; mod = n // budget = 5
+    ids = [
+        r.id
+        for r in spark.range(400)
+        .filter(F.pmod(F.xxhash64("id"), F.lit(n // budget)) != 0)
+        .orderBy("id")
+        .limit(n)
+        .collect()
+    ]
+    assert len(ids) == n
+    rng = np.random.default_rng(3)
+    rows = [(int(i), [int(x) for x in rng.integers(-50, 50, DIM)]) for i in ids]
+    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<long>")
+
+    seen = []
+    kmeans = sd._kmeans_numpy
+    monkeypatch.setattr(
+        sd, "_kmeans_numpy",
+        lambda mat, k, seed: seen.append(mat.copy()) or kmeans(mat, k, seed),
+    )
+    train_centroids(vectors, 2, train_rows_per_centroid=4)
+    (mat,) = seen
+    want = np.array(sorted(rows)[:budget], dtype=object)[:, 1]
+    assert mat.shape == (budget, DIM)
+    assert np.array_equal(mat, np.vstack(want).astype(np.float64))

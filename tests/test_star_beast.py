@@ -11,7 +11,7 @@ from jirlbot_spark.operators.beast import (
 from jirlbot_spark.operators.star import (
     distinct_new_edges,
     pld_indegree,
-    star_budgets,
+    star_budgets_scalable,
 )
 
 
@@ -27,7 +27,7 @@ def test_star_indegree_and_budget(spark):
     deg = {r.pld_hash: r.indegree for r in pld_indegree(d).collect()}
     assert deg == {1: 3, 2: 1}
 
-    budgets = star_budgets(
+    budgets = star_budgets_scalable(
         pld_indegree(d), top_k=2, b_hi=100, b_lo=10
     ).collect()
     by_pld = {r.pld_hash: (r.rank, r.budget) for r in budgets}
@@ -104,7 +104,7 @@ def test_budget_monotonicity(spark):
         [(p, rng.randint(0, 1000)) for p in range(300)],
         ["pld_hash", "indegree"],
     )
-    b = star_budgets(deg, top_k=100, b_hi=1000, b_lo=10).collect()
+    b = star_budgets_scalable(deg, top_k=100, b_hi=1000, b_lo=10).collect()
     by_deg = sorted(b, key=lambda r: (-r.indegree, r.pld_hash))
     budgets = [r.budget for r in by_deg]
     assert budgets == sorted(budgets, reverse=True)
@@ -126,28 +126,46 @@ def test_topk_per_bucket(spark):
 
 
 def test_star_budgets_scalable_equivalence(spark):
-    """star_budgets_scalable ≡ star_budgets on (pld_hash, budget) for
-    every PLD, and on rank for the top-k (the tail's rank is null by
-    contract)."""
+    """star_budgets_scalable ≡ the pure-Python STAR ranking of the crawl
+    simulator (tests/oracle_sim.star_budgets) on the budget of every PLD,
+    over a partitioned edge table with indegree ties; the top-k carry
+    ranks 1..k in (indegree desc, pld_hash asc) order, the tail a null
+    rank."""
     import random
 
-    from jirlbot_spark.operators.star import star_budgets_scalable
+    from tests.oracle_sim import SimConfig, h64
+    from tests.oracle_sim import star_budgets as sim_star_budgets
 
     rng = random.Random(11)
-    rows = [(i, rng.randint(1, 500)) for i in range(937)]
-    deg = spark.createDataFrame(rows, "pld_hash long, indegree long").repartition(7)
-    a = star_budgets(deg, top_k=50, b_hi=2000, b_lo=10)
-    b = star_budgets_scalable(deg, top_k=50, b_hi=2000, b_lo=10)
-    am = {r.pld_hash: (r.rank, r.budget) for r in a.collect()}
-    bm = {r.pld_hash: (r.rank, r.budget) for r in b.collect()}
-    assert set(am) == set(bm)
-    for pld, (rank_a, budget_a) in am.items():
-        rank_b, budget_b = bm[pld]
-        assert budget_a == budget_b, pld
-        if rank_a <= 50:
-            assert rank_b == rank_a, pld
-        else:
-            assert rank_b is None, pld
+    plds = [f"p{i}.com" for i in range(300)]
+    edges = {
+        (rng.choice(plds), dst)
+        for dst in plds
+        for _ in range(rng.randint(1, 12))
+    }
+    edges = {(s, d) for s, d in edges if s != d}
+    cfg = SimConfig(top_k=50, b_hi=2000, b_lo=10)
+    want = {h64(p): b for p, b in sim_star_budgets(edges, cfg).items()}
+
+    edge_df = spark.createDataFrame(
+        [(h64(s), h64(d)) for s, d in edges], "src_pld long, dst_pld long"
+    ).repartition(7)
+    deg = pld_indegree(distinct_new_edges(edge_df, None)).repartition(5)
+    got = star_budgets_scalable(
+        deg, top_k=cfg.top_k, b_hi=cfg.b_hi, b_lo=cfg.b_lo
+    ).collect()
+    assert {r.pld_hash: r.budget for r in got} == want
+    top = sorted(
+        (r for r in got if r.rank is not None), key=lambda r: r.rank
+    )
+    assert [r.rank for r in top] == list(range(1, cfg.top_k + 1))
+    assert [(-r.indegree, r.pld_hash) for r in top] == sorted(
+        (-r.indegree, r.pld_hash) for r in top
+    )
+    best_tail = min(
+        (-r.indegree, r.pld_hash) for r in got if r.rank is None
+    )
+    assert (-top[-1].indegree, top[-1].pld_hash) < best_tail
 
 
 def _pagerank_reference(edges, iterations):

@@ -13,6 +13,9 @@
    the http-backed loop must reproduce the oracle simulator's exact
    crawl ordering and URL-seen set, with statuses and politeness
    timestamps recorded in fetch_log.
+4. A Ctrl-C during commit_batch's concurrent table writes surfaces as
+   KeyboardInterrupt, is not logged as a write failure, and leaves the
+   manifest untouched.
 """
 
 from __future__ import annotations
@@ -338,6 +341,37 @@ def test_bloom_sidecar_rejected_on_snapshot_store(tmp_path):
         None,
         CrawlConfig(bloom_dir=str(tmp_path / "bloom")),
     )
+
+
+# ------------------------------------------- commit_batch interrupt
+
+
+class _InterruptedWrite:
+    """A table whose write is cut by Ctrl-C (the DataFrameWriter lookup
+    is the first thing commit_batch's per-table writer touches)."""
+
+    @property
+    def write(self):
+        raise KeyboardInterrupt
+
+
+def test_commit_interrupt_propagates_unlogged(spark, tmp_path, caplog):
+    import logging
+
+    from pyspark.sql import functions as F
+
+    store = TableStore(spark, str(tmp_path / "state"))
+    good = spark.range(5).select(F.col("id").alias("url_hash"))
+    store.commit_batch(0, {"a": TableWrite(good)})
+    before = store.manifest()
+    with caplog.at_level(logging.ERROR, logger="jirlbot_spark.storage"):
+        with pytest.raises(KeyboardInterrupt):
+            store.commit_batch(
+                1, {"a": TableWrite(good), "b": TableWrite(_InterruptedWrite())}
+            )
+    assert store.manifest() == before
+    assert not [r for r in caplog.records if "failed" in r.getMessage()]
+    assert store.read("a").count() == 5
 
 
 # ------------------------------- http_fetch inside a CrawlLoop batch

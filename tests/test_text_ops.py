@@ -419,6 +419,39 @@ def test_ivf_stale_high_hint_bounded(spark, vectors):
         )
 
 
+def test_ivf_empty_sample_error_names_its_cause(spark):
+    """The empty-hash-sample overflow error blames the corpus_rows hint
+    only when the caller passed one; without a hint it names the ids."""
+    from jirlbot_spark.operators.similarity import ivf_topk
+
+    def corpus(id_expr):
+        return spark.range(100).select(
+            id_expr.alias("vec_id"),
+            F.array(
+                *[(F.col("id") * (i + 3) % 97).cast("long") for i in range(8)]
+            ).alias("embedding"),
+        )
+
+    kw = dict(k=2, n_centroids=1, nprobe=1, train_rows_per_centroid=1)
+    big = corpus(F.col("id"))
+    with pytest.raises(
+        ValueError, match=r"corpus_rows hint \(1000000000000\) looks far too HIGH"
+    ):
+        ivf_topk(big.filter(F.col("vec_id") < 2), big, corpus_rows=10**12, **kw)
+
+    # one shared id that misses residue 0 of pmod(xxhash64(id), 100)
+    shared = next(
+        r.id for r in spark.range(10)
+        .filter(F.pmod(F.xxhash64("id"), F.lit(100)) != 0).collect()
+    )
+    clumped = corpus(F.lit(shared).cast("long"))
+    with pytest.raises(ValueError) as err:
+        ivf_topk(clumped.limit(1), clumped, **kw)
+    msg = str(err.value)
+    assert "training sample came back empty" in msg
+    assert "hint" not in msg
+
+
 def test_blocked_neardup_exact_equals_brute_force(spark):
     """blocked_neardup_exact (block-nested self-join) must equal the
     naive all-pairs computation exactly — same pair set, bit-identical

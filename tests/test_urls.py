@@ -10,7 +10,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from jirlbot_spark.functions.urls import (
+from tests.pandas_urls import (
     canonicalize_series,
     host_of_series,
     pld_series,
@@ -20,7 +20,7 @@ REJECT = None
 
 CANON_CASES = [
     # (raw, base, expected)
-    # fixpoint %-decode (pinned contract, urls.py PCT_DECODE_PHASE1
+    # fixpoint %-decode (pinned contract, urls_arrow.py PCT_DECODE_PHASE1
     # comment): malformed stray-% input decodes until stable so the
     # canonical form stays idempotent — '%7%45E' -> '%7EE' -> '~E'
     ("http://example.com/%7%45E", "", "http://example.com/~E"),
@@ -164,27 +164,27 @@ def test_dedup_after_canonicalization():
 def test_spark_canonicalize_udf(spark):
     from pyspark.sql import functions as F
 
-    from jirlbot_spark.functions.urls import canonicalize_udf, pld_udf, host_udf
+    from jirlbot_spark.functions.urls_arrow import canonicalize_col, pld_col
 
     df = spark.createDataFrame(
         [(c[0], c[1]) for c in CANON_CASES], ["url", "base"]
     )
     got = df.select(
-        canonicalize_udf(F.col("url"), F.col("base")).alias("canon")
+        canonicalize_col(F.col("url"), F.col("base")).alias("canon")
     ).collect()
     for row, (r, b, exp) in zip(got, CANON_CASES):
         assert row.canon == exp, f"{r!r} -> {row.canon!r}, want {exp!r}"
 
     df2 = spark.createDataFrame([(h,) for h, _ in PLD_CASES], ["host"])
-    got2 = df2.select(pld_udf(F.col("host")).alias("pld")).collect()
+    got2 = df2.select(pld_col(F.col("host")).alias("pld")).collect()
     for row, (h, exp) in zip(got2, PLD_CASES):
         assert row.pld == exp
 
 
 def test_fused_prepare_matches_composed(spark):
     """prepare_urls_fused ≡ composing canonicalize/host/pld/murmur."""
-    from jirlbot_spark.functions.hashing import murmur3_64_series
     from jirlbot_spark.functions.prepare import prepare_urls_fused
+    from tests.pandas_urls import murmur3_64_series
 
     raws = [c[0] for c in CANON_CASES] + [
         f"http://Site{i}.Example.COM:80/p/{i}#x" for i in range(50)

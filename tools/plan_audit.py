@@ -1,7 +1,7 @@
 """Physical-plan audit: print `.explain(formatted)` for the engine's hot
 operators and grep the evidence that the scale posture holds —
 PushedFilters reaching parquet scans, WholeStageCodegen spans, broadcast
-joins for small dims, single wide exchange in the DRUM classify plan.
+joins for small dims, a single wide exchange in the DRUM plan.
 
 Writes PLANS.md at the repo root. Run: python tools/plan_audit.py
 """
@@ -36,12 +36,41 @@ def capture_plan(df, execute: bool = True) -> str:
     return buf.getvalue()
 
 
+def _final_tree(plan: str) -> list[str]:
+    """Node lines of the executed (final adaptive) plan tree."""
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def _exchanges(plan: str) -> list[int]:
+    """Line numbers of shuffle Exchange nodes (not Reused/Broadcast)."""
+    return [
+        i for i, ln in enumerate(_final_tree(plan))
+        if re.search(r"\bExchange \(", ln)
+    ]
+
+
+def _probe_below_first_exchange(plan: str) -> bool:
+    """The plan's one MapInPandas node is a descendant of its first
+    shuffle Exchange: every tree line between them is indented deeper
+    than the Exchange, so the probe runs map-side of that shuffle."""
+    tree = _final_tree(plan)
+    probes = [i for i, ln in enumerate(tree) if "MapInPandas" in ln]
+    ex = _exchanges(plan)
+    if len(probes) != 1 or not ex or probes[0] < ex[0]:
+        return False
+    col = tree[ex[0]].index("Exchange")
+    return all(
+        tree[i].find("+-") > col - 3 for i in range(ex[0] + 1, probes[0] + 1)
+    )
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
     import bench
+    from jirlbot_spark.functions.prepare import prepare_urls_fused
     from jirlbot_spark.operators.beast import beast_enforce
-    from jirlbot_spark.operators.dedup import check_update
+    from jirlbot_spark.operators.dedup import check_update_agg
     from jirlbot_spark.operators.membership import build_bloom_files
     from jirlbot_spark.session import get_spark
 
@@ -70,8 +99,12 @@ def main() -> None:
         )
     )
 
-    # --- DRUM classify: ONE wide exchange, reused by window + join
-    prepared = bench.prepare_urls(bench.build_frontier(spark, 200_000))
+    # --- DRUM check_update_agg (the crawl loop's engine), plain and with
+    # the Bloom sidecar probe the loop runs when bloom_dir is set
+    prepared = prepare_urls_fused(
+        bench.build_frontier(spark, 200_000), "url", None,
+        keep=("id", "priority"),
+    )
     prepared.write.mode("overwrite").parquet(wd + "/prep")
     prepared = spark.read.parquet(wd + "/prep")
     seen = prepared.limit(50_000).select(
@@ -80,49 +113,13 @@ def main() -> None:
     )
     seen.write.mode("overwrite").partitionBy("bucket").parquet(wd + "/seen")
     seen = spark.read.parquet(wd + "/seen")
-    classified, _ = check_update(
-        prepared, seen, key_col="url_hash", order_col="id"
-    )
-    sections.append(
-        (
-            "DRUM classify (dedup.classify_batch)",
-            "The wide batch must show exactly ONE Exchange "
-            "hashpartitioning(url_hash...) feeding both the window sort "
-            "and the membership join (exchange reuse); the seen side is a "
-            "narrow key-only shuffle.",
-            capture_plan(classified),
-        )
-    )
-
-    # --- Bloom fast path: same shape plus a shuffle-free mapInPandas
-    bloom_dir = wd + "/bloom"
-    build_bloom_files(seen, bloom_dir, num_buckets=32, log2_bits=20)
-    classified_b, _ = check_update(
-        prepared,
-        seen,
-        key_col="url_hash",
-        order_col="id",
-        bloom_dir=bloom_dir,
-    )
-    sections.append(
-        (
-            "DRUM classify with Bloom sidecar probe",
-            "Identical join/window shape; the MapInPandas probe sits "
-            "BELOW the exchange (no extra shuffle) and its maybe-flag "
-            "joins the equi-condition.",
-            capture_plan(classified_b),
-        )
-    )
-
-    # --- DRUM check_update_agg: hot-path formulation, zero sorts
-    from jirlbot_spark.operators.dedup import check_update_agg
-
     fresh_agg, _ = check_update_agg(
         prepared, seen, key_col="url_hash", order_col="id"
     )
+    agg_plan = capture_plan(fresh_agg)
     sections.append(
         (
-            "DRUM check_update (agg formulation — loop/bench hot path)",
+            "DRUM check_update_agg (crawl-loop engine)",
             "groupBy(key).agg(min_by) + shuffle_hash left-anti join: NO "
             "Window operator — in-batch first-arrival comes from the "
             "aggregate, whose partial phase collapses duplicates before "
@@ -132,7 +129,28 @@ def main() -> None:
             "— var-length buffers aren't hash-aggregable — which still "
             "measures faster than the window and the narrow-min+join-back "
             "alternatives; see check_update_agg docstring.)",
-            capture_plan(fresh_agg),
+            agg_plan,
+        )
+    )
+
+    bloom_dir = wd + "/bloom"
+    build_bloom_files(seen, bloom_dir, num_buckets=32, log2_bits=20)
+    fresh_bloom, _ = check_update_agg(
+        prepared,
+        seen,
+        key_col="url_hash",
+        order_col="id",
+        bloom_dir=bloom_dir,
+    )
+    bloom_plan = capture_plan(fresh_bloom)
+    sections.append(
+        (
+            "DRUM check_update_agg with Bloom sidecar probe",
+            "The probe (a shuffle-free MapInPandas) sits BELOW the single "
+            "wide Exchange hashpartitioning(url_hash...) of the "
+            "first-arrival aggregate, so it adds no shuffle; only the "
+            "maybe-seen slice joins the narrow key-only store side.",
+            bloom_plan,
         )
     )
 
@@ -147,6 +165,7 @@ def main() -> None:
         budgets,
         salt_buckets=8,
     )
+    beast_plan = capture_plan(enforced)
     sections.append(
         (
             "BEAST admission (salted)",
@@ -155,7 +174,7 @@ def main() -> None:
             "phase-1 window partitions by (pld_hash, __salt) so no task "
             "owns a hot PLD's full row set; phase-2 runs on ≤ "
             "salt×budget survivors.",
-            capture_plan(enforced),
+            beast_plan,
         )
     )
 
@@ -614,30 +633,27 @@ def main() -> None:
         and "GreaterThan" in sections[0][2],
         "2-column ReadSchema on pruned scan": "l_orderkey" in sections[0][2]
         and "l_comment" not in sections[0][2],
-        "WholeStageCodegen spans present in classify": "codegen id"
-        in sections[1][2].lower()
-        or "WholeStageCodegen" in sections[1][2],
-        "single wide exchange in classify (exchange reuse)": sections[1][2].count(
-            "Exchange hashpartitioning(url_hash"
-        )
-        <= 2,  # one wide + one narrow probe-side
-        "Bloom probe is below the exchange (no extra shuffle)": sections[2][
-            2
-        ].count("Exchange")
-        <= sections[1][2].count("Exchange"),
+        "WholeStageCodegen spans present in DRUM": "codegen id"
+        in agg_plan.lower()
+        or "WholeStageCodegen" in agg_plan,
+        "Bloom probe adds no exchange (wide one reused by both slices)":
+        len(_exchanges(bloom_plan)) == len(_exchanges(agg_plan))
+        and any("ReusedExchange" in ln for ln in _final_tree(bloom_plan)),
+        "Bloom probe runs once, below the single wide exchange":
+        _probe_below_first_exchange(bloom_plan),
         "agg-formulation dedup has no Window operator": "Window ("
-        not in sections[3][2],
+        not in agg_plan,
         "agg-formulation dedup collapses dups map-side (partial min_by)":
-        "partial_min_by" in sections[3][2],
+        "partial_min_by" in agg_plan,
         "agg-formulation dedup anti-join is hash, not sort-merge":
-        "SortMergeJoin" not in sections[3][2]
+        "SortMergeJoin" not in agg_plan
         and (
-            "ShuffledHashJoin" in sections[3][2]
-            or "BroadcastHashJoin" in sections[3][2]
+            "ShuffledHashJoin" in agg_plan
+            or "BroadcastHashJoin" in agg_plan
         ),
-        "BEAST budget join broadcasts": "BroadcastHashJoin" in sections[4][2]
-        or "BroadcastExchange" in sections[4][2],
-        "salted window before global window": "__salt" in sections[4][2],
+        "BEAST budget join broadcasts": "BroadcastHashJoin" in beast_plan
+        or "BroadcastExchange" in beast_plan,
+        "salted window before global window": "__salt" in beast_plan,
         "shingle tokenization below the Generate (once per doc)":
         _split_below_generate(shingle_plan),
         "BPE word_freqs aggregates map-side (partial_count)":
